@@ -11,6 +11,10 @@ sort chronologically (stable: existing before new), rewrite, print
 the count summary and a 5-line sample (`index.js:124-130`). ``--dedup``
 enables the exact dedup the reference's comment intends but never
 implements (`index.js:110`).
+
+Each invocation runs ONE Spark job: the write. The summary's counts are
+``DataFrame.observe`` metrics of that job and its sample is read back
+from the written file, so nothing is re-parsed or re-sorted.
 """
 
 from __future__ import annotations
@@ -22,6 +26,8 @@ import shutil
 import sys
 import tempfile
 
+from pyspark.sql import Observation
+
 from cgtcalc_data_transformer_spark import schemas
 from cgtcalc_data_transformer_spark.operators import bullionvault, fidelity, freetrade, ii
 from cgtcalc_data_transformer_spark.operators.pipeline import merge_sorted, report
@@ -32,6 +38,7 @@ from cgtcalc_data_transformer_spark.sources import (
     read_header_csv,
     read_preamble_csv,
     write_output,
+    written_lines,
 )
 
 SOURCE_TYPES = ["freetrade", "ii", "fidelity", "bullionvault"]
@@ -62,28 +69,43 @@ def run_pipeline(
     output → chronological sort → rewrite. Mirrors the reference's
     main() body (`/root/reference/index.js:79-122`); factored out of
     ``main`` so tests can replay multi-invocation sequences against
-    one SparkSession (each real CLI run owns its session)."""
+    one SparkSession (each real CLI run owns its session).
+
+    The write is the only Spark job. Its result goes to a temp dir next
+    to ``output`` and replaces it only after the job succeeded: the job
+    reads the old output, and a fail-fast abort must leave it intact."""
     new_lines = parse_source(spark, source_type, path)
     existing = (
         read_existing_output(spark, output) if os.path.exists(output) else None
     )
-    merged = merge_sorted(existing, new_lines, dedup=dedup)
+    counts = Observation("cgtcalc")
+    merged = merge_sorted(
+        existing, new_lines, dedup=dedup, partitioned=partitioned, observation=counts
+    )
 
-    if partitioned:
-        write_output(merged, output, partitioned=True)
-        return report(merged, new_count=new_lines.count())
-
-    # single-file mode: write to a temp dir, move the part file
-    # over the output path (byte-identical data.txt contract)
-    tmp = tempfile.mkdtemp(prefix="cgtcalc_out_")
+    tmp = tempfile.mkdtemp(prefix=".cgtcalc_out_", dir=os.path.dirname(os.path.abspath(output)))
     try:
-        write_output(merged, tmp, partitioned=False)
-        part = glob.glob(os.path.join(tmp, "part-*"))
-        rep = report(merged, new_count=new_lines.count())
-        if part:
-            shutil.move(part[0], output)
-        else:  # no rows
-            open(output, "w").close()
+        written = os.path.join(tmp, "out")
+        write_output(merged, written)
+        metrics = counts.get  # sum() over no rows is NULL
+        rep = report(metrics["total"], metrics["new"] or 0, written_lines(written))
+        if partitioned:
+            old = os.path.join(tmp, "old")
+            if os.path.exists(output):
+                os.rename(output, old)
+            try:
+                os.rename(written, output)
+            except BaseException:
+                if os.path.exists(old):  # put the previous output back
+                    os.rename(old, output)
+                raise
+        else:
+            # byte-identical data.txt contract: the one part file is it
+            part = glob.glob(os.path.join(written, "part-*"))
+            if part:
+                os.replace(part[0], output)
+            else:  # no rows
+                open(output, "w").close()
         return rep
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -121,6 +143,7 @@ def main(argv: list[str] | None = None) -> int:
         return 1
 
     spark = get_spark(app_name=f"cgtcalc-{args.source_type}")
+    spark.sparkContext.setJobDescription(f"cgtcalc {args.source_type}")
     try:
         rep = run_pipeline(
             spark,

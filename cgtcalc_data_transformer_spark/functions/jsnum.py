@@ -9,21 +9,18 @@ the fidelity kernel every parser depends on (SURVEY.md §4.4).
 
 Two implementations:
 
-- ``js_num``: pure JVM path — Spark's double→string cast already
-  produces the shortest round-trip digits (Java ``Double.toString``
-  uses the same uniqueness criterion as ECMA-262 ToString); we strip
-  the trailing ``.0`` that Java prints for integral values. Stays
-  inside whole-stage codegen: this is the hot path.
-
-  Java's scientific-notation thresholds ([1e-3, 1e7) vs JS's
-  [1e-6, 1e21)) are rewritten JVM-side to the JS notation over the
-  FULL double range — see the ``js_num`` docstring. Remaining
-  caveat: Java 17's pre-Ryū ``Double.toString`` emits one extra
-  significant digit for ~0.2% of doubles with |x| ≳ 1e16 (e.g.
-  215556435655560672 vs shortest 21555643565556067e1) and for the
-  smallest subnormals (4.9e-324 vs 5e-324); JDK ≥ 19 removes the
-  divergence. ``js_num_exact`` is byte-exact there if needed —
-  finance-range data never is.
+- ``js_num``: pure JVM path — Spark's double→string cast (Java
+  ``Double.toString``) gives round-trip digits in Java's notation; a
+  flat CASE rewrites them to JS notation over the FULL double range —
+  see the ``js_num`` docstring. Caveat: Java 17's pre-Ryū
+  ``Double.toString`` does not always print the SHORTEST round-trip
+  digits. It emits extra significant digits for some doubles with 16+
+  digits (2^-24 → 5.9604644775390625E-8 vs JS 5.960464477539063e-8;
+  215556435655560672 vs 21555643565556067e1), for the smallest
+  subnormals (4.9e-324 vs 5e-324), and at |x| >= 1e16 occasionally a
+  non-closest 17th digit. The output still round-trips to the same
+  double; JDK >= 19 removes the divergence. ``js_num_exact`` is
+  byte-exact there if needed.
 
 - ``js_num_exact``: Arrow-batched pandas UDF implementing the full
   ECMA-262 rules via Python ``repr`` (also shortest round-trip) with
@@ -41,58 +38,41 @@ from pyspark.sql.types import StringType
 def js_num(col: Column | str) -> Column:
     """JS number formatting — pure JVM expressions, full double range.
 
-    Java's ``Double.toString`` and ECMA-262 agree on the shortest
-    round-trip DIGITS but not the NOTATION: Java goes scientific
-    outside [1e-3, 1e7), JS outside [1e-6, 1e21). So on top of the
-    trailing-``.0`` strip we rewrite Java's ``d.dddEn``:
+    Java's ``Double.toString`` and ECMA-262 agree on the round-trip
+    DIGITS but not the NOTATION: Java goes scientific outside
+    [1e-3, 1e7), JS outside [1e-6, 1e21). One flat CASE, each branch a
+    built-in touching the string once, so the generated code stays
+    linear (the former positional expansion built from substring/repeat
+    re-inlined its sub-expressions per branch and overflowed Janino's
+    64 KB method limit in wide parser plans):
 
-    - ``-6 <= n <= 20`` → positional expansion (JS prints plainly),
-    - otherwise → JS exponent form ``d.ddde±n`` (lowercase e, signed
-      exponent, no ``.0`` mantissa).
+    - no ``E`` → strip the trailing ``.0`` Java prints for integrals;
+    - 1e-6 <= |x| < 1e-3 and 1e7 <= |x| < 1e21 (JS prints plainly) →
+      exact string→decimal cast at a scale that holds all 17 digits,
+      then strip trailing zeros and a trailing ``.``;
+    - otherwise → JS exponent form ``d.ddde±n`` by regex.
 
-    All string surgery is concat/substring/repeat on codegen-friendly
-    built-ins — no UDF on the serialization hot path (ADVICE r1).
+    No UDF on the serialization hot path (ADVICE r1).
     """
     c = (F.col(col) if isinstance(col, str) else col).cast("double")
     s = c.cast("string")
-    neg = s.startswith("-")
-    sign = F.when(neg, F.lit("-")).otherwise(F.lit(""))
-    body = F.regexp_replace(s, r"^-", "")
+    a = F.abs(c)
 
-    # --- scientific input: Java mantissa is always d[.ddd] with one
-    # leading digit and no trailing zeros (except the literal ".0").
-    mant = F.substring_index(body, "E", 1)
-    exp = F.substring_index(body, "E", -1).cast("int")
-    intd = F.substring_index(mant, ".", 1)
-    frac = F.substring_index(mant, ".", -1)
-    frac_clean = F.when(frac == "0", F.lit("")).otherwise(frac)
-    digits = F.concat(intd, frac_clean)
-    flen = F.length(frac_clean)
+    def plain(scale: int) -> Column:
+        # BigDecimal(String) keeps Java's digits exactly; the scale only
+        # has to cover them (<= 17 significant digits, exponent -6..20).
+        d = s.try_cast(f"decimal(38,{scale})").cast("string")
+        return F.regexp_replace(F.regexp_replace(d, r"0+$", ""), r"\.$", "")
 
-    pos_expanded = (
-        F.when(exp >= flen, F.concat(digits, F.repeat(F.lit("0"), exp - flen)))
-        .when(
-            exp >= 0,
-            F.concat(
-                F.substring(digits, F.lit(1), exp + 1),
-                F.lit("."),
-                F.substring(digits, exp + 2, F.length(digits)),
-            ),
-        )
-        .otherwise(F.concat(F.lit("0."), F.repeat(F.lit("0"), -exp - 1), digits))
+    sci = F.regexp_replace(
+        F.regexp_replace(F.regexp_replace(s, r"\.0E", "E"), "E-", "e-"), "E", "e+"
     )
-    js_sci = F.concat(
-        intd,
-        F.when(flen > 0, F.concat(F.lit("."), frac_clean)).otherwise(F.lit("")),
-        F.when(exp >= 0, F.lit("e+")).otherwise(F.lit("e-")),
-        F.abs(exp).cast("string"),
-    )
-    from_sci = F.when((exp >= -6) & (exp <= 20), pos_expanded).otherwise(js_sci)
-
     return (
         F.when(c == 0.0, F.lit("0"))  # covers -0.0: JS String(-0) is "0"
-        .when(body.contains("E"), F.concat(sign, from_sci))
-        .otherwise(F.regexp_replace(s, r"\.0$", ""))
+        .when(~s.contains("E"), F.regexp_replace(s, r"\.0$", ""))
+        .when((a >= 1e-6) & (a < 1e-3), plain(22))
+        .when((a >= 1e7) & (a < 1e21), plain(10))
+        .otherwise(sci)
     )
 
 

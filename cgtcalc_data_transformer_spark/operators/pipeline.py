@@ -10,10 +10,17 @@ before new ones, each in source order (`index.js:12-36,115,118`).
 
 Spark's sort is not stable → we carry explicit tiebreakers:
 ``source_rank`` (0 = existing, 1 = new) and a per-source monotonic
-sequence. At scale the ``orderBy`` range-partitions on the date key,
-so the output is globally ordered across part files without a single-
-node bottleneck; ``coalesce(1)`` is only for the byte-identical
-single-file mode.
+sequence. Two physical shapes, one per sink mode:
+
+- ``partitioned=True``: ``orderBy`` range-partitions on the date key,
+  so the output is globally ordered across part files without a
+  single-node bottleneck (scale mode).
+- ``partitioned=False``: the byte-identical single ``data.txt``.
+  ``coalesce(1)`` sits right after the union, before the dedup
+  ``groupBy``, and the order comes from ``sortWithinPartitions`` on
+  the same keys. One partition satisfies the aggregate's distribution,
+  so parse, merge, dedup, sort and write run as one stage of one job
+  with no Exchange — no range-sampling job, no shuffle.
 
 ``dedup=True`` implements the intent the reference comments but never
 ships: exact line-level dedup before the sort.
@@ -21,7 +28,10 @@ ships: exact line-level dedup before the sort.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Iterable
+from itertools import islice
+
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from cgtcalc_data_transformer_spark.functions.dates import date_key_from_ddmmyyyy
 from cgtcalc_data_transformer_spark.functions.validation import require
@@ -31,11 +41,17 @@ def merge_sorted(
     existing: DataFrame | None,
     new: DataFrame,
     dedup: bool = False,
+    partitioned: bool = True,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """existing ∪ new lines, chronologically sorted, stably tied.
 
     Input DataFrames have a single ``line`` column. Output: a single
-    ``line`` column, globally ordered by (date, source, sequence).
+    ``line`` column, globally ordered by (date, source, sequence) —
+    range-partitioned when ``partitioned``, else in one partition.
+    ``observation`` collects, on whatever job consumes the result,
+    ``total`` (lines out) and ``new`` (new lines in, counted before
+    dedup, as the reference's summary counts them).
     """
     # Tiebreak must be listing-order independent: Spark bin-packs file
     # splits by SIZE, so monotonically_increasing_id alone follows an
@@ -97,21 +113,33 @@ def merge_sorted(
     else:
         merged = tagged_new
 
+    if not partitioned:  # one partition from here on: no Exchange below
+        merged = merged.coalesce(1)
+
+    # New input lines each output row stands for: its source_rank, or
+    # after dedup the group's sum of them. Counted on the sorted frame,
+    # not on the new frame: under ``partitioned`` the range-partition
+    # sampling job re-runs everything below the sort's Exchange, and an
+    # observation there would count each new line twice.
+    new_rows = F.col("source_rank")
     if dedup:
         # The `index.js:110` comment's stated intent: exact dedup.
         # Keep the earliest (existing-first) occurrence of each line.
         merged = (
             merged.groupBy("line")
             .agg(
-                F.min(F.struct("source_rank", "src_file", "seq")).alias("first_seen")
+                F.min(F.struct("source_rank", "src_file", "seq")).alias("first_seen"),
+                F.sum("source_rank").alias("new_rows"),
             )
             .select(
                 "line",
                 F.col("first_seen.source_rank").alias("source_rank"),
                 F.col("first_seen.src_file").alias("src_file"),
                 F.col("first_seen.seq").alias("seq"),
+                "new_rows",
             )
         )
+        new_rows = F.col("new_rows")
 
     date_str = F.split(F.col("line"), " ").getItem(1)
     date_key = date_key_from_ddmmyyyy(date_str)
@@ -120,11 +148,14 @@ def merge_sorted(
         date_key,
         F.concat(F.lit("Invalid date in line: "), F.col("line")),
     )
-    return (
-        merged.withColumn("_date_key", date_key)
-        .orderBy("_date_key", "source_rank", "src_file", "seq")
-        .select("line")
-    )
+    keyed = merged.withColumn("_date_key", date_key)
+    keys = ["_date_key", "source_rank", "src_file", "seq"]
+    ordered = keyed.orderBy(*keys) if partitioned else keyed.sortWithinPartitions(*keys)
+    if observation is not None:
+        ordered = ordered.observe(
+            observation, F.count(F.lit(1)).alias("total"), F.sum(new_rows).alias("new")
+        )
+    return ordered.select("line")
 
 
 def violations(existing: DataFrame | None, new: DataFrame) -> DataFrame:
@@ -143,10 +174,9 @@ def violations(existing: DataFrame | None, new: DataFrame) -> DataFrame:
     )
 
 
-def report(df: DataFrame, new_count: int | None = None, sample: int = 5) -> dict:
+def report(total: int, new_count: int | None, lines: Iterable[str], sample: int = 5) -> dict:
     """Count + first-N sample, the reference's console summary
-    (`/root/reference/index.js:124-130`). One job: limit is a
-    CollectLimitExec, count an aggregate."""
-    total = df.count()
-    head = [r["line"] for r in df.limit(sample).collect()]
-    return {"total": total, "new": new_count, "sample": head}
+    (the reference's `index.js:124-130`). Pure: the counts come from
+    the write job's observed metrics and ``lines`` from the written
+    file(s), so the summary launches no Spark job."""
+    return {"total": total, "new": new_count, "sample": list(islice(lines, sample))}

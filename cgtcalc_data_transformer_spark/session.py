@@ -42,6 +42,30 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap for this host: min(32g, ~60% of MemTotal), in MiB.
+
+    local[N] puts driver + all N executor threads in ONE JVM; an 8g
+    heap across 32 concurrent tasks forces multi-second GC pauses late
+    in long query batteries (observed as 5-10x outliers on otherwise
+    sub-second queries), hence the 32g ceiling for large hosts. On a
+    small host a 32g ceiling lets the heap outgrow physical memory and
+    the kernel OOM-kills the JVM, so the heap is capped at 60% of
+    MemTotal, leaving room for off-heap buffers, Python workers and the
+    OS. Unreadable ``meminfo`` (non-Linux) → the 32g ceiling.
+    """
+    ceiling_mib = 32 * 1024
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mib = int(line.split()[1]) // 1024  # value is in kB
+                    return f"{min(ceiling_mib, total_mib * 6 // 10)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{ceiling_mib}m"
+
+
 # Warehouse + Derby metastore dir, created once per process. mkdtemp
 # (NOT a pid-keyed name): /tmp persists across runs and pids recycle,
 # so a pid-keyed path can collide with a stale warehouse left by an
@@ -94,13 +118,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local[N] puts driver + all N executor threads in ONE JVM; an
-        # 8g heap across 32 concurrent tasks forces multi-second GC
-        # pauses late in long query batteries (observed as 5-10x
-        # outliers on otherwise sub-second queries). 32g on the 128 GiB
-        # box keeps old-gen churn off the critical path; a real cluster
-        # sizes executor memory separately.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        # sized from this host (default_driver_memory); a real cluster
+        # sizes executor memory separately
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():

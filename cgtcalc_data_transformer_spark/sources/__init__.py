@@ -8,6 +8,7 @@ from cgtcalc_data_transformer_spark.sources.tpch import load_table, load_tables,
 from cgtcalc_data_transformer_spark.sources.text_output import (
     read_existing_output,
     write_output,
+    written_lines,
 )
 
 __all__ = [
@@ -21,4 +22,5 @@ __all__ = [
     "load_events",
     "read_existing_output",
     "write_output",
+    "written_lines",
 ]

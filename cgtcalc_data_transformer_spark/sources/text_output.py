@@ -5,12 +5,20 @@ re-sorts and rewrites it (`/root/reference/index.js:108-122`). The
 Spark shape of that contract:
 
 - read: ``spark.read.text`` + trim + drop-blank (S7)
-- write: single text file with a trailing newline for byte-identical
-  output (K1). ``coalesce(1)`` is an explicit small-output choice —
-  at scale you would keep it partitioned (``partitioned=True``).
+- write: one text file per partition of the input, with a trailing
+  newline (K1). The partitioning is decided upstream: the merge
+  (``operators/pipeline.py``) applies ``coalesce(1)`` right after the
+  union for the byte-identical single ``data.txt``, and keeps the
+  range-partitioned sort at scale.
+- head: the first lines of what a write produced, read back from its
+  part files rather than by re-running the query.
 """
 
 from __future__ import annotations
+
+import glob
+import os
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -27,13 +35,16 @@ def read_existing_output(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_output(df: DataFrame, path: str, partitioned: bool = False) -> None:
-    """Write DataFrame[line] as text.
+def write_output(df: DataFrame, path: str) -> None:
+    """Write DataFrame[line] as text, one part file per partition."""
+    df.write.mode("overwrite").text(path)
 
-    ``partitioned=False`` reproduces the reference's single
-    ``data.txt`` (one part file); ``partitioned=True`` is the
-    100 TB-scale mode (one file per partition, order preserved by
-    the upstream range-partitioned sort).
-    """
-    out = df if partitioned else df.coalesce(1)
-    out.write.mode("overwrite").text(path)
+
+def written_lines(path: str) -> Iterator[str]:
+    """Lines of the ``write_output`` result in directory ``path``,
+    lazily: its part files in part-name order, which is the sort order
+    of a partitioned write."""
+    for part in sorted(glob.glob(os.path.join(path, "part-*"))):
+        with open(part, encoding="utf-8") as f:
+            for line in f:
+                yield line.rstrip("\n")

@@ -51,11 +51,35 @@ def test_dedup_mode(spark):
     assert got == ["BUY 01/01/2024 X 1 1 0", "SELL 02/01/2024 Y 1 1 0"]
 
 
-def test_report(spark):
-    df = _lines_df(spark, [f"BUY 0{i}/01/2024 A 1 1 0" for i in range(1, 8)])
-    rep = report(df, new_count=7)
+def test_report():
+    lines = [f"BUY 0{i}/01/2024 A 1 1 0" for i in range(1, 8)]
+    rep = report(7, 7, iter(lines))
     assert rep["total"] == 7
+    assert rep["new"] == 7
     assert len(rep["sample"]) == 5
+    assert rep["sample"] == lines[:5]
+
+
+def test_single_partition_mode_matches_range_sort(spark):
+    """``partitioned=False`` (one partition, sortWithinPartitions) gives
+    the same order as the range-partitioned sort, with and without
+    dedup, and its observation counts new lines before dedup."""
+    from pyspark.sql import Observation
+
+    existing = _lines_df(
+        spark, ["BUY 01/01/2024 X 1 1 0", "SELL 03/02/2024 Y 1 1 0", "BUY 01/01/2024 OLD 1 1 0"]
+    )
+    new = _lines_df(
+        spark,
+        ["BUY 02/01/2024 Z 1 1 0", "BUY 01/01/2024 X 1 1 0", "BUY 01/01/2024 NEW 1 1 0"],
+    )
+    for dedup, total in [(False, 6), (True, 5)]:
+        want = [r.line for r in merge_sorted(existing, new, dedup=dedup).collect()]
+        obs = Observation()
+        single = merge_sorted(existing, new, dedup=dedup, partitioned=False, observation=obs)
+        assert single.rdd.getNumPartitions() == 1
+        assert [r.line for r in single.collect()] == want
+        assert obs.get == {"total": total, "new": 3}
 
 
 def test_tag_probe_does_not_poison_pyspark_logger(spark):
